@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line with steady-state timings.
@@ -44,15 +46,25 @@ object Bench {
 
     // noop sink: forces full computation of every output column
     // (count() would let column pruning skip the projections under test)
-    // A thrown query must NOT masquerade as a fast one — its name lands in
-    // `errors` in bench_detail.json (the stdout contract stays unchanged).
+    // A thrown query must NOT masquerade as a fast one: a failed run has
+    // no timing, the query lands in `errors` (stdout line and
+    // bench_detail.json) and none of its runs count toward any total.
+    // Fatal errors (OOM, interrupts) are not caught — they end the bench.
     val errors = scala.collection.mutable.LinkedHashSet[String]()
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                name: String = ""): Double = {
+                name: String = ""): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => if (name.nonEmpty) errors += name }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case NonFatal(e) =>
+          if (name.nonEmpty) {
+            errors += name
+            System.err.println(s"[bench] $name failed: $e")
+          }
+          None
+      }
     }
 
     // Steady-state hygiene: the first run janino-compiles the stage code
@@ -223,7 +235,7 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy { case (name, _) => (streamGates.contains(name), name) }
-    val results = ordered.map { case (name, fn) =>
+    val results = ordered.flatMap { case (name, fn) =>
       val jit0 = jitMsNow(); val gc0 = gcMsNow(); val thr0 = threadsNow()
       val first = runOnce(fn, name)
       // unpersist anything run 1 leaked so later runs can't skip real work
@@ -257,7 +269,8 @@ object Bench {
       // quiesce so they reflect what the gate actually left behind.
       if (streamGates.contains(name))
         operators.StreamQueries.quiesceBetweenGates()
-      name -> (first, samples(0), samples(1), samples(2), counters)
+      for (f <- first; s1 <- samples(0); s2 <- samples(1); s3 <- samples(2))
+        yield name -> (f, s1, s2, s3, counters)
     }
     def median3(a: Double, b: Double, c: Double): Double =
       Seq(a, b, c).sorted.apply(1)
@@ -290,14 +303,15 @@ object Bench {
           ",\"thr\":" + thr + ",\"thr_d\":" + thrD + ",\"ssp\":" + ssp +
           ",\"mnt\":" + mnt + ",\"lbq\":" + lbq + "}"
     }
+    val errorsJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val probeEnd = probeMs()
     val probeParEnd = probeParMs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"first_run_total":${fmt(firstTotal)},"probe_ms_start":${fmt(probeStart)},"probe_ms_end":${fmt(probeEnd)},"probe_par_ms_start":${fmt(probeParStart)},"probe_par_ms_end":${fmt(probeParEnd)},"errors":${errors.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":${detailQs.mkString("{", ",", "}")},"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"first_run_total":${fmt(firstTotal)},"probe_ms_start":${fmt(probeStart)},"probe_ms_end":${fmt(probeEnd)},"probe_par_ms_start":${fmt(probeParStart)},"probe_par_ms_end":${fmt(probeParEnd)},"errors":$errorsJson,"queries":${detailQs.mkString("{", ",", "}")},"sf":"$sfDir"}""")
     // Stdout line: steady-state only, slowest first, capped so the whole
     // JSON line stays well inside the 2000-char tail window.
-    val budget = 1500
+    val budget = 1500 - errorsJson.length
     val head = new StringBuilder
     bySteady.foreach { case (k, (_, s, _, _, _, _)) =>
       val q = s"\"" + k + "\":" + fmt(s)
@@ -306,7 +320,7 @@ object Bench {
         head.append(q)
       }
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"queries":{${head.result()}},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"errors":$errorsJson,"queries":{${head.result()}},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -29,14 +29,17 @@ object MatrixQueries {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private def liDims(s: SparkSession, d: String): (Long, Long) = {
+  private[graft] def liDims(s: SparkSession, d: String): (Long, Long) = {
     // MAX over the two key columns is answerable from parquet row-group
     // STATISTICS alone — the same exact value the full scan computes, read
     // from the footers (guide §6: verify the scan does only the work the
     // query needs; at 100 TB this is a metadata read vs a full pass over
     // the fact table). Aggregate pushdown needs the v2 parquet reader, so
-    // both confs are scoped to this one aggregate and restored; any
-    // failure falls back to the plain scan-aggregate.
+    // both confs are scoped to this one aggregate and restored. A file
+    // whose row groups carry no min/max statistics makes the footer
+    // aggregate refuse (an UnsupportedOperationException from the scan
+    // task, wrapped by the failed job); only that falls back to the plain
+    // scan-aggregate, and the fallback is logged.
     def maxes(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val r = df
         .selectExpr("CAST(max(l_partkey) AS BIGINT)", "CAST(max(l_suppkey) AS BIGINT)")
@@ -54,7 +57,11 @@ object MatrixQueries {
       s.conf.set(AGG_PD, "true")
       maxes(s.read.parquet(s"$d/lineitem.parquet"))
     } catch {
-      case _: Throwable =>
+      case e: Exception
+          if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[UnsupportedOperationException]) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"lineitem footer statistics unusable, scanning instead: $e")
         s.conf.set(V1_LIST, oldV1); s.conf.set(AGG_PD, oldPd)
         maxes(s.read.parquet(s"$d/lineitem.parquet"))
     } finally {

@@ -1047,39 +1047,22 @@ object Hdf5 {
 
   /** Write the element table as a stack of `<blk>.h5` files (dataset
     * `name` in each, `blockSize` elements per file, last ragged) — the
-    * `to_npy_stack` shape with HDF5 block files: one task per block,
-    * gaps densified to zero, absent blocks emitted by the driver. */
+    * `to_npy_stack` shape with HDF5 block files: blocks densify through
+    * [[ChunkWrite]], gaps and absent blocks are written as zeros. */
   def writeStack(elements: DataFrame, dir: String, blockSize: Long, n: Long,
                  name: String = "data"): Unit = {
     val sess = elements.sparkSession
     val (fs0, base0) = StoreIO.fsOf(dir, sess.sparkContext.hadoopConfiguration)
     fs0.mkdirs(base0)
-    import sess.implicits._
-    val numBlocks = ((n + blockSize - 1) / blockSize).max(0)
     val bconf = sess.sparkContext.broadcast(
       new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $blockSize AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        val vals = new Array[Double](len)
-        it.foreach { case (_, idx, v) => vals((idx % blockSize).toInt) = v }
+    ChunkWrite.dense(elements.where(col("idx") >= 0 && col("idx") < n),
+        s"idx DIV $blockSize", s"idx % $blockSize", (n + blockSize - 1) / blockSize,
+        blk => (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt, 0.0) {
+      (blk, vals) =>
         val (fs, base) = StoreIO.fsOf(dir, bconf.value.value)
         StoreIO.writeFile(fs, new Path(base, s"$blk.h5"),
-          h5Bytes(Seq((name, vals, Seq(len.toLong)))))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    while (blk < numBlocks) {
-      if (!written.contains(blk)) {
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        StoreIO.writeFile(fs0, new Path(base0, s"$blk.h5"),
-          h5Bytes(Seq((name, new Array[Double](len), Seq(len.toLong)))))
-      }
-      blk += 1
+          h5Bytes(Seq((name, vals, Seq(vals.length.toLong)))))
     }
   }
 

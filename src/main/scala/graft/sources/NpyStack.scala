@@ -83,96 +83,51 @@ object NpyStack {
   }
 
   /** Write the element table as a stack of `<blk>.npy` files, `blockSize`
-    * elements per file (last file ragged). One task per block.
+    * elements per file (last file ragged) — the rank-1 case of
+    * [[writeNd]].
     *
     * `n` is the logical array length: every block is densified to its
     * exact `[blk*blockSize, min((blk+1)*blockSize, n))` range with values
     * placed by `idx % blockSize` and gaps zero-filled — element tables are
     * sparse (zeros dropped), and positioning by sort order would silently
     * compact gaps and shift every subsequent value. Blocks with no
-    * elements at all are emitted as all-zero files from the driver loop
-    * below, so read-side offsets stay aligned. */
-  def write(elements: DataFrame, dir: String, blockSize: Long, n: Long): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = StoreIO.fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    import sess.implicits._
-    val numBlocks = ((n + blockSize - 1) / blockSize).max(0)
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $blockSize AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        val vals = new Array[Double](len)
-        it.foreach { case (_, idx, v) => vals((idx % blockSize).toInt) = v }
-        val (fs, base) = StoreIO.fsOf(dir, bconf.value.value) // driver's conf
-        StoreIO.writeFile(fs, new Path(base, s"$blk.npy"), npyBytes(vals))
-        (blk, len.toLong)
-      }.collect() // drives the write job; returns O(numBlocks) stats
-    // blocks with zero surviving elements never reach mapGroups — emit
-    // their all-zero files here so the stack has no holes
-    val have = written.map(_._1).toSet
-    var blk = 0L
-    while (blk < numBlocks) {
-      if (!have.contains(blk)) {
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        StoreIO.writeFile(fs0, new Path(base0, s"$blk.npy"),
-          npyBytes(new Array[Double](len)))
-      }
-      blk += 1
-    }
-  }
+    * elements at all are written as all-zero files, so read-side offsets
+    * stay aligned. */
+  def write(elements: DataFrame, dir: String, blockSize: Long, n: Long): Unit =
+    writeRows(elements.select(col("idx").as("c0"), col("v")), Seq(n), dir, blockSize)
 
   /** Write an N-d array as a `.npy` stack split along AXIS 0 (the
     * reference's `to_npy_stack` contract, `io/_to_npy_stack.py:13`:
     * `blockRows` rows of the leading axis per file, each file a full
-    * C-order N-d block, last file ragged). One task per block; blocks
-    * with no surviving elements are emitted all-zero by the driver. */
-  def writeNd(nd: graft.NdArray, dir: String, blockRows: Long): Unit = {
-    val shape = nd.shape
+    * C-order N-d block, last file ragged). Blocks densify through
+    * [[ChunkWrite]]; blocks with no surviving elements are written
+    * all-zero. */
+  def writeNd(nd: graft.NdArray, dir: String, blockRows: Long): Unit =
+    writeRows(nd.df, nd.shape, dir, blockRows)
+
+  private def writeRows(cells: DataFrame, shape: Seq[Long], dir: String,
+                        blockRows: Long): Unit = {
     val rank = shape.length
     val rest = shape.tail
     val restVol = rest.product
-    val sess = nd.df.sparkSession
+    val sess = cells.sparkSession
     val (fs0, base0) = StoreIO.fsOf(dir, sess.sparkContext.hadoopConfiguration)
     fs0.mkdirs(base0)
-    import sess.implicits._
     val rows = shape.head
-    val numBlocks = ((rows + blockRows - 1) / blockRows).max(0)
     val restStrides = rest.scanRight(1L)(_ * _).tail
     val pSql = (s"(c0 % $blockRows) * $restVol" +:
       (1 until rank).map(a => s"c$a * ${restStrides(a - 1)}L")).mkString(" + ")
     val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
       .mkString(" AND ")
+    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
     val bconf = sess.sparkContext.broadcast(
       new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = nd.df
-      .where(inBounds)
-      .selectExpr(s"c0 DIV $blockRows AS b", s"($pSql) AS p", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) =>
-        val len = math.min((b + 1) * blockRows, rows) - b * blockRows
-        val vals = new Array[Double]((len * restVol).toInt)
-        it.foreach { case (_, p, v) => vals(p.toInt) = v }
+    val lenOf = (b: Long) => math.min((b + 1) * blockRows, rows) - b * blockRows
+    ChunkWrite.dense(cells.where(inBounds), s"c0 DIV $blockRows", pSql,
+        (rows + blockRows - 1) / blockRows, b => (lenOf(b) * restVol).toInt, 0.0) {
+      (b, vals) =>
         val (fs, base) = StoreIO.fsOf(dir, bconf.value.value)
-        StoreIO.writeFile(fs, new Path(base, s"$b.npy"),
-          npyBytesNd(vals, len +: rest))
-        b
-      }.collect().toSet
-    var b = 0L
-    while (b < numBlocks) {
-      if (!written.contains(b)) {
-        val len = math.min((b + 1) * blockRows, rows) - b * blockRows
-        StoreIO.writeFile(fs0, new Path(base0, s"$b.npy"),
-          npyBytesNd(new Array[Double]((len * restVol).toInt), len +: rest))
-      }
-      b += 1
+        StoreIO.writeFile(fs, new Path(base, s"$b.npy"), npyBytesNd(vals, lenOf(b) +: rest))
     }
   }
 

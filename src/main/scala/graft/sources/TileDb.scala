@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * newer cells shadowing older ones. That model is exactly what a
   * parallel writer wants at scale — N writers emit N fragments with no
   * coordination, no shared-file append, no driver transit — so the sink
-  * here writes ONE FRAGMENT PER BLOCK TASK, and the source performs the
-  * shadowing merge as a distributed `max_by(value, (t2, name))` per cell.
+  * here writes ONE FRAGMENT PER BLOCK, and the source performs the
+  * shadowing merge as a distributed `max_by(value, (t2, name))` per cell
+  * whenever two committed fragments overlap.
   *
   * On-disk layout follows the public TileDB format layout
   * (github.com/TileDB-Inc/TileDB `format_spec`):
@@ -164,12 +165,13 @@ object TileDb {
 
   /** Write the 1-d element table `(idx, v)` into `uri` at logical write
     * timestamp `ts`, restricted to the inclusive subarray [lo, hi]. One
-    * FRAGMENT PER BLOCK TASK (block = `blockCells` consecutive cells):
-    * this is TileDB's native parallel-write model — immutable subarray
-    * fragments plus commit markers — so there is no shared-file append
-    * and no data through the driver. Gaps inside [lo, hi] densify to the
-    * schema fill value (the fragment claims its whole subarray, exactly
-    * as a TileDB dense write does). */
+    * FRAGMENT PER BLOCK (block = `blockCells` consecutive cells): this is
+    * TileDB's native parallel-write model — immutable subarray fragments
+    * plus commit markers — so there is no shared-file append and no data
+    * through the driver. Gaps inside [lo, hi] densify to the schema fill
+    * value, and blocks with no surviving elements still get a fill
+    * fragment (the fragment claims its whole subarray, exactly as a
+    * TileDB dense write does). */
   def write(elements: DataFrame, uri: String, ts: Long,
             lo: Long = 0L, hi: Long = -1L, blockCells: Long = 1L << 20): Unit = {
     val sess = elements.sparkSession
@@ -179,37 +181,25 @@ object TileDb {
     val n = schema.shape.head
     val hi1 = if (hi < 0) n - 1 else hi
     require(lo >= 0 && hi1 < n && lo <= hi1, s"subarray [$lo,$hi1] outside domain [0,${n - 1}]")
-    import sess.implicits._
-    val fill = schema.fill
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val numBlocks = (hi1 - lo) / blockCells + 1
-    val written = elements
-      .where(col("idx") >= lo && col("idx") <= hi1)
-      .selectExpr(s"(idx - $lo) DIV $blockCells AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val b0 = lo + blk * blockCells
-        val b1 = math.min(b0 + blockCells - 1, hi1)
-        val vals = Array.fill((b1 - b0 + 1).toInt)(fill)
-        it.foreach { case (_, idx, v) => vals((idx - b0).toInt) = v }
-        writeFragment(uri, bconf.value.value, ts, Seq((b0, b1)), vals)
-        blk
-      }.collect().toSet
-    // blocks with no surviving elements still claim their subarray (a
-    // dense write covers the whole range) — emit their fill fragments
-    // DISTRIBUTED (a driver loop over a million-block subarray would
-    // serialize what the per-block tasks parallelize)
-    val missing = (0L until numBlocks).filterNot(written)
-    if (missing.nonEmpty) {
-      val (loC, hiC, bcC, fillC) = (lo, hi1, blockCells, fill)
-      sess.createDataset(missing).foreach { blk =>
-        val b0 = loC + blk * bcC
-        val b1 = math.min(b0 + bcC - 1, hiC)
-        writeFragment(uri, bconf.value.value, ts, Seq((b0, b1)),
-          Array.fill((b1 - b0 + 1).toInt)(fillC))
-      }
+    writeBlocks(elements.where(col("idx") >= lo && col("idx") <= hi1), uri, ts, lo,
+        blockCells, (hi1 - lo) / blockCells + 1, schema.fill) { blk =>
+      val b0 = lo + blk * blockCells
+      Seq((b0, math.min(b0 + blockCells - 1, hi1)))
+    }
+  }
+
+  /** The fragments of one write session: block `blk` holds the flat cells
+    * `[lo + blk * blockCells, …)` and claims the subarray `domOf(blk)`,
+    * whose volume is its cell count. Densified by [[ChunkWrite]], so every
+    * block, touched or not, becomes one committed fragment. */
+  private def writeBlocks(cells: DataFrame, uri: String, ts: Long, lo: Long,
+                          blockCells: Long, numBlocks: Long, fill: Double)
+                         (domOf: Long => Seq[(Long, Long)]): Unit = {
+    val sc = cells.sparkSession.sparkContext
+    val bconf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
+    ChunkWrite.dense(cells, s"(idx - $lo) DIV $blockCells", s"(idx - $lo) % $blockCells",
+        numBlocks, blk => domOf(blk).map { case (a, b) => b - a + 1 }.product.toInt, fill) {
+      (blk, vals) => writeFragment(uri, bconf.value.value, ts, domOf(blk), vals)
     }
   }
 
@@ -267,11 +257,35 @@ object TileDb {
     (schema, frags)
   }
 
+  /** The shadowing merge over decoded `(idx, v, r)` cells: the value from
+    * the fragment of greatest rank wins. When no two committed fragments
+    * share a cell, every cell has exactly one writer and the merge — a
+    * second full exchange — cannot change the answer, so it is skipped. */
+  private def shadow(decoded: DataFrame,
+                     frags: Seq[(String, Long, String, Seq[(Long, Long)])]): DataFrame =
+    if (disjoint(frags.map(_._4))) decoded.select(col("idx"), col("v"))
+    else decoded.groupBy("idx").agg(expr("max_by(v, r)").as("v"))
+
+  /** True when no two of the rectangular (inclusive per-dim) domains
+    * intersect: a sweep along axis 0 compares each domain only with the
+    * earlier ones whose axis-0 range it reaches. */
+  private[sources] def disjoint(doms: Seq[Seq[(Long, Long)]]): Boolean = {
+    val open = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
+    doms.sortBy(_.head._1).forall { d =>
+      open.filterInPlace(_.head._2 >= d.head._1)
+      val apart = open.forall(_.zip(d).exists { case ((alo, ahi), (blo, bhi)) =>
+        ahi < blo || bhi < alo })
+      open += d
+      apart
+    }
+  }
+
   /** Read the dense 1-d array as the element table `(idx, v)`: one
     * distributed `binaryFile` scan over every committed fragment's
     * `a0.tdb`, then the TileDB shadowing merge — the cell value from the
     * fragment with the greatest (t2, uuid) wins — as a `max_by` over a
-    * rank computed from the driver's O(numFragments) manifest. Cells no
+    * rank computed from the driver's O(numFragments) manifest, skipped
+    * when the manifest's domains are pairwise disjoint. Cells no
     * fragment covers surface as the schema fill value, generated from
     * `spark.range` over the driver-merged uncovered intervals. */
   def read(s: SparkSession, uri: String): DataFrame = {
@@ -301,66 +315,45 @@ object TileDb {
             (0 until content.length / 8).iterator.map(i => (lo + i, buf.getDouble(i * 8), r))
           }
         }.toDF("idx", "v", "r")
-    val merged = decoded.groupBy("idx").agg(expr("max_by(v, r)").as("v"))
-    // fill the gaps: complement of the union of fragment domains
+    fillGaps(s, shadow(decoded, frags), frags, n, 1L, schema.fill)
+  }
+
+  /** `merged` plus `fill`-valued cells for every axis-0 row of `rows` that
+    * no fragment covers — the complement of the union of the fragments'
+    * axis-0 ranges, each gap one contiguous flat range of `rowVol`-cell
+    * rows. */
+  private def fillGaps(s: SparkSession, merged: DataFrame,
+                       frags: Seq[(String, Long, String, Seq[(Long, Long)])],
+                       rows: Long, rowVol: Long, fill: Double): DataFrame = {
     val covered = frags.map(_._4.head).sortBy(_._1)
       .foldLeft(List.empty[(Long, Long)]) {
         case ((alo, ahi) :: rest, (lo, hi)) if lo <= ahi + 1 =>
           (alo, math.max(ahi, hi)) :: rest
         case (acc, iv) => iv :: acc
       }.reverse
-    val gaps = ((-1L +: covered.map(_._2)) :+ n)
-      .zip(covered.map(_._1) :+ n)
+    val gaps = ((-1L +: covered.map(_._2)) :+ rows)
+      .zip(covered.map(_._1) :+ rows)
       .collect { case (prevHi, nextLo) if nextLo > prevHi + 1 => (prevHi + 1, nextLo) }
-    val fill = schema.fill
     gaps.foldLeft(merged) { case (df, (g0, g1)) =>
-      df.unionByName(s.range(g0, g1).select(col("id").as("idx"), lit(fill).as("v")))
+      df.unionByName(s.range(g0 * rowVol, g1 * rowVol)
+        .select(col("id").as("idx"), lit(fill).as("v")))
     }
   }
 
   /** Write an N-d array as row-block fragments along axis 0 (subarray =
     * `[r0, r1] × full trailing dims` per block), the same blocking as
-    * [[NpyStack.writeNd]] — each block task emits its own fragment. */
+    * [[NpyStack.writeNd]] — each block becomes its own fragment. */
   def writeNd(a: graft.NdArray, uri: String, ts: Long, blockRows: Long): Unit = {
-    val s = a.elements.sparkSession
     val shape = a.shape
-    createArrayIfAbsent(s, uri, Schema(shape, blockRows +: shape.tail))
-    import s.implicits._
-    val restVol = shape.tail.product
-    val bconf = s.sparkContext.broadcast(
-      new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
-    val numBlocks = (shape.head + blockRows - 1) / blockRows
-    val nRows = shape.head
+    createArrayIfAbsent(a.df.sparkSession, uri, Schema(shape, blockRows +: shape.tail))
     val strides = shape.scanRight(1L)(_ * _).tail
     val idxSql = shape.indices.map(a => s"c$a * ${strides(a)}L").mkString(" + ")
     val inBounds = shape.indices.map(a => s"c$a >= 0 AND c$a < ${shape(a)}").mkString(" AND ")
-    val written = a.df // (c0..cR-1, v) → row-major (idx, v)
-      .where(inBounds)
-      .selectExpr(s"($idxSql) AS idx", "v")
-      .selectExpr(s"idx DIV (${blockRows * restVol}) AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val r0 = blk * blockRows
-        val r1 = math.min(r0 + blockRows, nRows) - 1
-        val base = r0 * restVol
-        val vals = new Array[Double](((r1 - r0 + 1) * restVol).toInt)
-        it.foreach { case (_, idx, v) => vals((idx - base).toInt) = v }
-        val dom = (r0, r1) +: shape.tail.map(d => (0L, d - 1))
-        writeFragment(uri, bconf.value.value, ts, dom, vals)
-        blk
-      }.collect().toSet
-    // fill fragments for untouched row-blocks, distributed (see write)
-    val missing = (0L until numBlocks).filterNot(written)
-    if (missing.nonEmpty) {
-      val (brC, nrC, rvC, tailDims) = (blockRows, nRows, restVol, shape.tail)
-      s.createDataset(missing).foreach { blk =>
-        val r0 = blk * brC
-        val r1 = math.min(r0 + brC, nrC) - 1
-        writeFragment(uri, bconf.value.value, ts,
-          (r0, r1) +: tailDims.map(d => (0L, d - 1)),
-          new Array[Double](((r1 - r0 + 1) * rvC).toInt))
-      }
+    val (nRows, tail) = (shape.head, shape.tail)
+    writeBlocks(a.df.where(inBounds).selectExpr(s"($idxSql) AS idx", "v"), uri, ts, 0L,
+        blockRows * tail.product, (nRows + blockRows - 1) / blockRows, 0.0) { blk =>
+      val r0 = blk * blockRows
+      (r0, math.min(r0 + blockRows, nRows) - 1) +: tail.map(d => (0L, d - 1))
     }
   }
 
@@ -405,7 +398,7 @@ object TileDb {
             }
           }
         }.toDF("idx", "v", "r")
-    val merged = decoded.groupBy("idx").agg(expr("max_by(v, r)").as("v"))
+    val merged = shadow(decoded, frags)
     // Densify uncovered cells to the schema fill, like the 1-d read():
     // writeNd/tiledbSink fragments span the FULL trailing dims, so the
     // uncovered region is a union of axis-0 row intervals, and a row
@@ -421,21 +414,7 @@ object TileDb {
       s"readNd: partial-trailing-dim fragments need fill == 0, schema has ${schema.fill}")
     val dense =
       if (schema.fill == 0.0) merged
-      else {
-        val covered = frags.map(_._4.head).sortBy(_._1)
-          .foldLeft(List.empty[(Long, Long)]) {
-            case ((alo, ahi) :: rest, (lo, hi)) if lo <= ahi + 1 =>
-              (alo, math.max(ahi, hi)) :: rest
-            case (acc, iv) => iv :: acc
-          }.reverse
-        val gaps = ((-1L +: covered.map(_._2)) :+ shape.head)
-          .zip(covered.map(_._1) :+ shape.head)
-          .collect { case (prevHi, nextLo) if nextLo > prevHi + 1 => (prevHi + 1, nextLo) }
-        gaps.foldLeft(merged) { case (df, (g0, g1)) =>
-          df.unionByName(s.range(g0 * rowVol, g1 * rowVol)
-            .select(col("id").as("idx"), lit(schema.fill).as("v")))
-        }
-      }
+      else fillGaps(s, merged, frags, shape.head, rowVol, schema.fill)
     graft.NdArray.fromFlat(dense.select(col("idx"), col("v")), shape)
   }
 }

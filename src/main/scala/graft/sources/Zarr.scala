@@ -948,90 +948,30 @@ object Zarr {
     }
   }
 
-  /** Write the element table as a 1-d zarr array of length `n`. Chunks
-    * densify by `idx` (gaps zero-filled); fully-absent chunks are written
-    * by the driver so the store is complete. `format` 2 writes a
-    * `.zarray` store (zlib/raw), 3 a `zarr.json` store (gzip/raw). */
+  /** Write the element table as a 1-d zarr array of length `n` — the
+    * rank-1 case of [[writeNd]]: chunks densify by `idx` (gaps
+    * zero-filled), absent chunks are written as zeros. `format` 2 writes
+    * a `.zarray` store (zlib/raw), 3 a `zarr.json` store (gzip/raw). */
   def write1d(elements: DataFrame, dir: String, n: Long, chunk: Long,
               compressor: Option[String] = None, format: Int = 2,
-              dtype: String = "<f8"): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(format, Seq(n), Seq(chunk), compressor).copy(dtype = dtype)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Double](intChunk(chunk)) // full chunk, edge padded
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
-        writeFile(fs, new Path(base, meta.keyOf(Seq(blk))),
-          encodeChunk(vals, comp, meta.dtype))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          encodeChunk(new Array[Double](intChunk(chunk)), comp, dtype))
-      blk += 1
-    }
-  }
+              dtype: String = "<f8"): Unit =
+    writeCells(asRank1(elements), Seq(n), dir, Seq(chunk), compressor, format, None, dtype)
 
   /** 1-d v3 `sharding_indexed` WRITE — the object-store scale tool: at 100 TB
     * a small chunk size (right for reads) makes millions of tiny objects;
     * sharding packs `chunk / inner` inner chunks into ONE object per
     * shard, cutting object count by that factor while keeping the inner
-    * chunk the random-access unit. Same distributed shape as [[write1d]]
-    * (one group per shard, executor-side IO, driver fills absent shards);
+    * chunk the random-access unit. The rank-1 case of [[writeNd]];
     * readable back by [[read1d]]'s `sharding_indexed` branch and by any
     * conforming v3 reader. */
   def write1dSharded(elements: DataFrame, dir: String, n: Long, chunk: Long,
                      inner: Long, compressor: Option[String] = None,
-                     dtype: String = "<f8"): Unit = {
-    require(chunk % inner == 0, s"inner chunk $inner must divide the shard $chunk")
-    val sess = elements.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(3, Seq(n), Seq(chunk), compressor)
-      .copy(shard = Some(Seq(inner)), dtype = dtype)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Double](intChunk(chunk))
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value)
-        writeFile(fs, new Path(base, meta.keyOf(Seq(blk))), encodeShard(vals, meta))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          encodeShard(new Array[Double](intChunk(chunk)), m))
-      blk += 1
-    }
-  }
+                     dtype: String = "<f8"): Unit =
+    writeCells(asRank1(elements), Seq(n), dir, Seq(chunk), compressor, 3,
+      Some(Seq(inner)), dtype)
+
+  private def asRank1(elements: DataFrame): DataFrame =
+    elements.select(col("idx").as("c0"), col("v"))
 
   /** Read a 1-d int64/int32 zarr array EXACTLY as a `(idx, v: BIGINT)`
     * element table — no pass through double, so int64 values above 2^53
@@ -1084,7 +1024,7 @@ object Zarr {
     * exact twin of [[write1d]] for values beyond double precision.
     * `inner` (v3 only) writes a `sharding_indexed` store: `chunk / inner`
     * int64 inner chunks packed per shard object, the exact-Long twin of
-    * [[write1dSharded]] (r12 verdict gap #4). */
+    * [[write1dSharded]]. */
   def write1dLong(elements: DataFrame, dir: String, n: Long, chunk: Long,
                   compressor: Option[String] = None, format: Int = 2,
                   inner: Option[Long] = None): Unit = {
@@ -1098,35 +1038,17 @@ object Zarr {
     val m = metaFor(format, Seq(n), Seq(chunk), compressor)
       .copy(dtype = "<i8", shard = inner.map(Seq(_)))
     writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
     val bcm = sess.sparkContext.broadcast(
       (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "CAST(v AS BIGINT) AS v")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Long](intChunk(chunk))
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
+    val len = intChunk(chunk) // full chunk, edge padded
+    ChunkWrite.denseLong(elements.where(col("idx") >= 0 && col("idx") < n),
+        s"idx DIV $chunk", s"idx % $chunk", (n + chunk - 1) / chunk, _ => len, 0L) {
+      (blk, vals) =>
         val (meta, sconf) = bcm.value
         val enc = if (meta.shard.isDefined) encodeShardLong(vals, meta)
-                  else encodeChunkLong(vals, comp)
+                  else encodeChunkLong(vals, meta.compressor)
         val (fs, base) = fsOf(dir, sconf.value)
         writeFile(fs, new Path(base, meta.keyOf(Seq(blk))), enc)
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk)) {
-        val empty = new Array[Long](intChunk(chunk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          if (m.shard.isDefined) encodeShardLong(empty, m)
-          else encodeChunkLong(empty, comp))
-      }
-      blk += 1
     }
   }
 
@@ -1291,17 +1213,24 @@ object Zarr {
   }
 
   /** Write a [[graft.NdArray]] of any rank as a zarr store with the given
-    * chunk shape — rank-generic twin of write1d/write2d: one task per
-    * chunk (groupBy the flat block index), full C-order chunks with edge
-    * padding, absent blocks filled by the driver so the store is
-    * complete. `shard` (v3 only) wraps the codec chain in
-    * `sharding_indexed`: each written object packs `chunks/shard` inner
-    * chunks behind a crc32c index — the 100 TB object-count lever, same
-    * semantics as [[write1dSharded]] at any rank. */
+    * chunk shape: full C-order chunks with edge padding, densified by
+    * [[ChunkWrite]] (map-side chunk fragments, one encode-and-write per
+    * chunk, absent chunks written as zeros) so the store is complete.
+    * `shard` (v3 only) wraps the codec chain in `sharding_indexed`: each
+    * written object packs `chunks/shard` inner chunks behind a crc32c
+    * index — the 100 TB object-count lever. `dtype` is the stored element
+    * type (`<f8`, `<f4`, `<i4`, `|u1`; integer types refuse values they
+    * cannot hold exactly). */
   def writeNd(nd: graft.NdArray, dir: String, chunks: Seq[Long],
               compressor: Option[String] = None, format: Int = 2,
-              shard: Option[Seq[Long]] = None): Unit = {
-    val shape = nd.shape
+              shard: Option[Seq[Long]] = None, dtype: String = "<f8"): Unit =
+    writeCells(nd.df, nd.shape, dir, chunks, compressor, format, shard, dtype)
+
+  /** [[writeNd]] over a bare coordinate table `(c0..c{r-1}, v)`, so the
+    * 1-d and 2-d writers (and zero-length arrays) share it. */
+  private def writeCells(cells: DataFrame, shape: Seq[Long], dir: String, chunks: Seq[Long],
+                         compressor: Option[String], format: Int,
+                         shard: Option[Seq[Long]], dtype: String): Unit = {
     require(chunks.length == shape.length && chunks.forall(_ > 0),
       s"bad chunk shape $chunks for $shape")
     shard.foreach { inner =>
@@ -1310,20 +1239,17 @@ object Zarr {
         inner.zip(chunks).forall { case (i, c) => i > 0 && c % i == 0 },
         s"inner chunk shape $inner must divide the shard shape $chunks")
     }
-    val sess = nd.df.sparkSession
+    val sess = cells.sparkSession
     val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
     fs0.mkdirs(base0)
-    val m = metaFor(format, shape, chunks, compressor).copy(shard = shard)
+    val m = metaFor(format, shape, chunks, compressor).copy(shard = shard, dtype = dtype)
     writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
     val rank = shape.length
     val grid = m.chunkGrid
     def stridesOf(sh: Seq[Long]): Seq[Long] = sh.scanRight(1L)(_ * _).tail
     val gst = stridesOf(grid)
     val cst = stridesOf(chunks)
-    val chunkVol = chunks.product
-    require(chunkVol <= Int.MaxValue, s"chunk too large: $chunkVol")
+    val chunkVol = intChunk(chunks.product)
     // flat block index + in-chunk C-order position, exact integer projections
     val bSql = (0 until rank)
       .map(a => s"(c$a DIV ${chunks(a)}L) * ${gst(a)}L").mkString(" + ")
@@ -1333,71 +1259,24 @@ object Zarr {
       (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
     val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
       .mkString(" AND ")
-    val written = nd.df
-      .where(inBounds)
-      .selectExpr(s"($bSql) AS b", s"($pSql) AS p", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) =>
-        val vals = new Array[Double](chunkVol.toInt) // full chunk, edge padded
-        it.foreach { case (_, p, v) => vals(p.toInt) = v }
+    ChunkWrite.dense(cells.where(inBounds), bSql, pSql, grid.product, _ => chunkVol, 0.0) {
+      (b, vals) =>
         val (meta, sconf) = bcm.value
         val g = meta.chunkGrid
         val gs = g.scanRight(1L)(_ * _).tail
         val bcoords = g.indices.map(a => (b / gs(a)) % g(a))
         val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
         val enc = if (meta.shard.isDefined) encodeShard(vals, meta)
-                  else encodeChunk(vals, comp)
+                  else encodeChunk(vals, meta.compressor, meta.dtype)
         writeFile(fs, new Path(base, meta.keyOf(bcoords)), enc)
-        b
-      }.collect().toSet
-    val fillEnc =
-      if (m.shard.isDefined) encodeShard(new Array[Double](chunkVol.toInt), m)
-      else encodeChunk(new Array[Double](chunkVol.toInt), comp)
-    var b = 0L
-    while (b < grid.product) {
-      if (!written.contains(b)) {
-        val bcoords = grid.indices.map(a => (b / gst(a)) % grid(a))
-        writeFile(fs0, new Path(base0, m.keyOf(bcoords)), fillEnc)
-      }
-      b += 1
     }
   }
 
-  /** Write a cell table `(i, j, v)` as a 2-d zarr array. */
+  /** Write a cell table `(i, j, v)` as a 2-d zarr array — the rank-2 case
+    * of [[writeNd]]. */
   def write2d(cells: DataFrame, dir: String, rows: Long, cols: Long,
               chunkR: Long, chunkC: Long,
-              compressor: Option[String] = None, format: Int = 2): Unit = {
-    val sess = cells.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(format, Seq(rows, cols), Seq(chunkR, chunkC), compressor)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = cells
-      .where(col("i") >= 0 && col("i") < rows && col("j") >= 0 && col("j") < cols)
-      .selectExpr(s"i DIV $chunkR AS bi", s"j DIV $chunkC AS bj", "i", "j", "v")
-      .as[(Long, Long, Long, Long, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .mapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Long, Long, Double)]) =>
-        val (bi, bj) = key
-        val vals = new Array[Double]((chunkR * chunkC).toInt)
-        it.foreach { case (_, _, i, j, v) =>
-          vals(((i % chunkR) * chunkC + (j % chunkC)).toInt) = v
-        }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
-        writeFile(fs, new Path(base, meta.keyOf(Seq(bi, bj))), encodeChunk(vals, comp))
-        (bi, bj)
-      }.collect().toSet
-    val gr = (rows + chunkR - 1) / chunkR
-    val gc = (cols + chunkC - 1) / chunkC
-    for (bi <- 0L until gr; bj <- 0L until gc if !written.contains((bi, bj)))
-      writeFile(fs0, new Path(base0, m.keyOf(Seq(bi, bj))),
-        encodeChunk(new Array[Double]((chunkR * chunkC).toInt), comp))
-  }
+              compressor: Option[String] = None, format: Int = 2): Unit =
+    writeCells(cells.selectExpr("i AS c0", "j AS c1", "v"), Seq(rows, cols),
+      dir, Seq(chunkR, chunkC), compressor, format, None, "<f8")
 }

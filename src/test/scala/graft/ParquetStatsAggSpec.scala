@@ -51,4 +51,26 @@ class ParquetStatsAggSpec extends AnyFunSuite {
     assert(s.conf.get(V1_LIST) == beforeV1, "useV1SourceList not restored")
     assert(s.conf.get(AGG_PD, "false") == beforePd, "aggregatePushdown not restored")
   }
+
+  test("a lineitem without footer statistics falls back to the scan; other failures surface") {
+    val s = spark
+    val d = java.nio.file.Files.createTempDirectory("graft-nostats").toString
+    s.range(1000).selectExpr("id % 97 AS l_partkey", "id % 13 AS l_suppkey")
+      .write.option("parquet.column.statistics.enabled", "false")
+      .parquet(s"$d/lineitem.parquet")
+    val (beforeV1, beforePd) = (s.conf.get(V1_LIST), s.conf.get(AGG_PD, "false"))
+    // the footer aggregate itself refuses this file ...
+    s.conf.set(V1_LIST, "")
+    s.conf.set(AGG_PD, "true")
+    try intercept[Exception] {
+      s.read.parquet(s"$d/lineitem.parquet").selectExpr("max(l_partkey)").collect()
+    } finally { s.conf.set(V1_LIST, beforeV1); s.conf.set(AGG_PD, beforePd) }
+    // ... so the dims come from the scan
+    assert(operators.MatrixQueries.liDims(s, d) == ((97L, 13L)))
+    // a missing table is not a statistics problem: no silent retry
+    intercept[org.apache.spark.sql.AnalysisException] {
+      operators.MatrixQueries.liDims(s, s"$d/absent")
+    }
+    assert(s.conf.get(V1_LIST) == beforeV1 && s.conf.get(AGG_PD, "false") == beforePd)
+  }
 }

@@ -170,4 +170,29 @@ class TileDbSpec extends AnyFunSuite {
       assert(v == want, s"($i,$j,$k): got $v want $want")
     }
   }
+
+  test("the shadowing merge runs only when committed fragments overlap") {
+    assert(TileDb.disjoint(Seq(Seq((0L, 9L)), Seq((10L, 19L)))))
+    assert(!TileDb.disjoint(Seq(Seq((0L, 9L)), Seq((9L, 19L)))))
+    // same rows, disjoint columns; then a third domain that misses its
+    // axis-0 predecessor but hits an earlier, still-open one
+    val a = Seq((0L, 100L), (0L, 4L))
+    val b = Seq((10L, 20L), (5L, 9L))
+    assert(TileDb.disjoint(Seq(a, b)))
+    assert(!TileDb.disjoint(Seq(a, b, Seq((50L, 60L), (3L, 3L)))))
+    val s = spark
+    val aggs = (uri: String) => TileDb.read(s, uri).queryExecution.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Aggregate => g
+    }.size
+    val uri = freshDir()
+    TileDb.createArray(s, uri, TileDb.Schema(Seq(200L), Seq(64L)))
+    TileDb.write(s.range(200).selectExpr("id AS idx", "CAST(id AS DOUBLE) AS v"),
+      uri, ts = 1L, blockCells = 64L)
+    assert(aggs(uri) == 0, "disjoint fragments need no merge")
+    TileDb.write(s.range(50, 70).selectExpr("id AS idx", "CAST(-id AS DOUBLE) AS v"),
+      uri, ts = 2L, lo = 50L, hi = 69L, blockCells = 64L)
+    assert(aggs(uri) == 1, "overlapping fragments keep the merge")
+    val got = TileDb.read(s, uri).orderBy("idx").collect().map(_.getDouble(1))
+    assert(got.toSeq == (0 until 200).map(i => if (i >= 50 && i < 70) -i.toDouble else i.toDouble))
+  }
 }
