@@ -19,6 +19,16 @@ import org.apache.spark.sql.SparkSession
   * harness's own JIT debt, not plan quality.)
   */
 object Bench {
+  /** The stdout line's `errors` and `errors_n` fields: the first failed
+    * query names that fit in 300 characters, plus how many failed, so the
+    * line stays inside the tail window however many fail (the full list
+    * goes to bench_detail.json). */
+  private[graft] def errorsField(errors: Seq[String]): String = {
+    val shown = errors.map("\"" + _ + "\"").scanLeft("")((acc, e) =>
+      if (acc.isEmpty) e else acc + "," + e).takeWhile(_.length <= 300).last
+    s""""errors":[$shown],"errors_n":${errors.size}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -47,8 +57,9 @@ object Bench {
     // noop sink: forces full computation of every output column
     // (count() would let column pruning skip the projections under test)
     // A thrown query must NOT masquerade as a fast one: a failed run has
-    // no timing, the query lands in `errors` (stdout line and
-    // bench_detail.json) and none of its runs count toward any total.
+    // no timing, the query lands in `errors` (bench_detail.json; the
+    // stdout line names the first few and counts all in `errors_n`) and
+    // none of its runs count toward any total.
     // Fatal errors (OOM, interrupts) are not caught — they end the bench.
     val errors = scala.collection.mutable.LinkedHashSet[String]()
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -303,15 +314,15 @@ object Bench {
           ",\"thr\":" + thr + ",\"thr_d\":" + thrD + ",\"ssp\":" + ssp +
           ",\"mnt\":" + mnt + ",\"lbq\":" + lbq + "}"
     }
-    val errorsJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val probeEnd = probeMs()
     val probeParEnd = probeParMs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"first_run_total":${fmt(firstTotal)},"probe_ms_start":${fmt(probeStart)},"probe_ms_end":${fmt(probeEnd)},"probe_par_ms_start":${fmt(probeParStart)},"probe_par_ms_end":${fmt(probeParEnd)},"errors":$errorsJson,"queries":${detailQs.mkString("{", ",", "}")},"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"first_run_total":${fmt(firstTotal)},"probe_ms_start":${fmt(probeStart)},"probe_ms_end":${fmt(probeEnd)},"probe_par_ms_start":${fmt(probeParStart)},"probe_par_ms_end":${fmt(probeParEnd)},"errors":${errors.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":${detailQs.mkString("{", ",", "}")},"sf":"$sfDir"}""")
     // Stdout line: steady-state only, slowest first, capped so the whole
     // JSON line stays well inside the 2000-char tail window.
-    val budget = 1500 - errorsJson.length
+    val errorsOut = errorsField(errors.toSeq)
+    val budget = 1500 - errorsOut.length
     val head = new StringBuilder
     bySteady.foreach { case (k, (_, s, _, _, _, _)) =>
       val q = s"\"" + k + "\":" + fmt(s)
@@ -320,7 +331,7 @@ object Bench {
         head.append(q)
       }
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},"errors":$errorsJson,"queries":{${head.result()}},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"value_minpaced":${fmt(totalMinPaced)},$errorsOut,"queries":{${head.result()}},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

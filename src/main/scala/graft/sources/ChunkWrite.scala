@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** The one densify path of every chunked-store writer ([[Zarr]],
   * [[NpyStack]], [[TileDb]], [[Hdf5.writeStack]]): cell rows in, one dense
@@ -10,11 +11,14 @@ import org.apache.spark.sql.DataFrame
   *
   * Each map task folds its rows into per-chunk fragments: positions plus
   * values while a chunk is thinly touched, a value array plus presence
-  * bits once half its cells are. Only fragments cross the shuffle — at
-  * most (input partitions × chunks touched) records, never one per cell —
-  * so map memory stays proportional to the rows a task holds. Values
-  * travel as raw 64-bit words, so NaN payloads, -0.0 and ±Inf (and int64
-  * beyond 2^53 on the exact-long path) arrive bit for bit.
+  * bits once half its cells are. Only fragments cross the shuffle, never
+  * one record per cell. A fragment leaves the task as soon as its chunk
+  * is complete, and the task never holds room for more than a few chunks
+  * at once (see [[Fold]]), so its memory is bounded by the chunk size, not
+  * by the input split; a task whose rows fit that bound emits one
+  * fragment per chunk it touches. Values travel as raw 64-bit words, so
+  * NaN payloads, -0.0 and ±Inf (and int64 beyond 2^53 on the exact-long
+  * path) arrive bit for bit.
   *
   * The reduce side runs min(numBlocks, defaultParallelism) tasks; task
   * `p` owns the chunks `p, p + tasks, …` and walks them in order. A chunk
@@ -57,23 +61,9 @@ object ChunkWrite {
     val cells = rows.selectExpr(s"CAST(($blkSql) AS BIGINT)",
       s"CAST(($posSql) AS BIGINT)", valueSql).queryExecution.toRdd
     cells
-      .mapPartitions { it =>
-        val frags = scala.collection.mutable.LongMap.empty[Fragment]
-        var lastBlk = -1L
-        var last: Fragment = null
-        it.foreach { row =>
-          val blk = row.getLong(0)
-          if (blk != lastBlk || last == null) {
-            require(blk >= 0 && blk < numBlocks, s"chunk id $blk outside [0, $numBlocks)")
-            last = frags.getOrElseUpdate(blk, new Fragment(lenOf(blk)))
-            lastBlk = blk
-          }
-          require(!row.isNullAt(2), s"null value in chunk $blk")
-          last.add(row.getLong(1),
-            if (doubles) java.lang.Double.doubleToRawLongBits(row.getDouble(2))
-            else row.getLong(2))
-        }
-        frags.iterator.map { case (blk, f) => (blk, f.compact()) }
+      .mapPartitions { rows =>
+        val fold = new Fold(numBlocks, lenOf, doubles)
+        rows.flatMap(fold.add) ++ fold.flush() // flush runs once rows are spent
       }
       .repartitionAndSortWithinPartitions(new OwnerPartitioner(tasks))
       .foreachPartition { it =>
@@ -86,6 +76,57 @@ object ChunkWrite {
           blk += tasks
         }
       }
+  }
+
+  /** One map task's fragments, let go as early as possible: a fragment
+    * that holds every cell of its chunk leaves at once, and when the open
+    * fragments hold room for more than four of the largest chunks seen
+    * (and at least 2^20 cells, so small chunks do not cut a task's rows
+    * into many tiny fragments) they all leave. Input sorted by chunk emits
+    * each chunk once, whole; other input may emit a chunk in several
+    * fragments, which the reduce side merges like any other. */
+  private final class Fold(numBlocks: Long, lenOf: Long => Int, doubles: Boolean) {
+    private val frags = scala.collection.mutable.LongMap.empty[Fragment]
+    private var held = 0L // cells the open fragments hold room for
+    private var bound = 0L
+    private var lastBlk = -1L
+    private var last: Fragment = null
+
+    /** Fold one row; the fragments that leave because of it. */
+    def add(row: InternalRow): List[(Long, Fragment)] = {
+      val blk = row.getLong(0)
+      if (blk != lastBlk) {
+        require(blk >= 0 && blk < numBlocks, s"chunk id $blk outside [0, $numBlocks)")
+        last = frags.getOrElseUpdate(blk, {
+          val len = lenOf(blk)
+          bound = math.max(bound, math.max(4L * len, 1L << 20))
+          new Fragment(len)
+        })
+        lastBlk = blk
+      }
+      require(!row.isNullAt(2), s"null value in chunk $blk")
+      held -= last.held
+      last.add(row.getLong(1),
+        if (doubles) java.lang.Double.doubleToRawLongBits(row.getDouble(2))
+        else row.getLong(2))
+      if (last.full) {
+        frags.remove(blk)
+        lastBlk = -1L
+        List(blk -> last)
+      } else {
+        held += last.held
+        if (held > bound) flush() else Nil
+      }
+    }
+
+    /** Every open fragment, which leaves the task. */
+    def flush(): List[(Long, Fragment)] = {
+      val out = frags.toList.map { case (blk, f) => (blk, f.compact()) }
+      frags.clear()
+      held = 0L
+      lastBlk = -1L
+      out
+    }
   }
 
   /** Chunk `blk` belongs to reduce task `blk mod tasks`. */
@@ -115,6 +156,12 @@ object ChunkWrite {
         if (2L * n >= len) toDense()
       }
     }
+
+    /** Cells of room this fragment holds: its entries while sparse, the
+      * whole chunk once dense. */
+    def held: Int = if (present == null) n else len
+
+    def full: Boolean = present != null && n == len
 
     private def set(p: Int, w: Long): Unit = {
       val bit = 1L << p

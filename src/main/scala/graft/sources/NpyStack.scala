@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * The NPY header (magic + v1.0 + LE uint16 header length + python-dict
   * literal, '<f8' little-endian float64) is emitted and parsed in pure
   * Scala. Reading follows the reference's two-phase shape: block shapes
-  * come from an O(numBlocks) driver pass over the 128-byte headers (the
+  * come from an O(numBlocks) driver pass over the header prefixes (the
   * reference reads `.npy` headers eagerly the same way), the payloads are
   * decoded in one distributed `binaryFile` scan with the block-offset map
   * broadcast — data bytes never touch the driver. All store IO routes
@@ -131,35 +131,40 @@ object NpyStack {
     }
   }
 
-  /** Read an N-d `.npy` stack back as a [[graft.NdArray]]: the driver
-    * reads each block's shape tuple (O(numBlocks) header prefixes, all
-    * trailing extents must agree), payloads decode distributedly to flat
-    * row-major positions. */
+  /** Read an N-d `.npy` stack back as a [[graft.NdArray]]: all trailing
+    * extents must agree across blocks. */
   def readNd(s: SparkSession, dir: String): graft.NdArray = {
+    val (shapes, flat) = stack(s, dir)
+    require(shapes.nonEmpty, s"no .npy blocks under $dir")
+    val rest = shapes.head.tail
+    shapes.zipWithIndex.foreach { case (sh, b) =>
+      require(sh.tail == rest, s"block $b trailing shape ${sh.tail} != $rest")
+    }
+    graft.NdArray.fromFlat(flat, shapes.map(_.head).sum +: rest)
+  }
+
+  /** Read a `.npy` stack back as the element table `(idx, v)`. */
+  def read(s: SparkSession, dir: String): DataFrame = stack(s, dir)._2
+
+  /** The stack's block shapes in block order, and its cells as the flat
+    * element table `(idx, v)` (blocks concatenated in order, each
+    * C-order). Phase 1 (driver, O(numBlocks)): block shapes from the
+    * header prefixes. Phase 2 (distributed): payloads decode in one
+    * `binaryFile` scan with the block-offset map broadcast. */
+  private def stack(s: SparkSession, dir: String): (Seq[Seq[Long]], DataFrame) = {
     import s.implicits._
     val hconf = s.sparkContext.hadoopConfiguration
     val (fs, base) = StoreIO.fsOf(dir, hconf)
-    val shapes = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    StoreIO.listNames(dir, hconf).foreach { name =>
-      if (name.endsWith(".npy")) {
-        val prefix = StoreIO.readPrefix(fs, new Path(base, name), 256)
-        shapes += ((name.stripSuffix(".npy").toLong, parseShape(prefix)))
-      }
-    }
-    require(shapes.nonEmpty, s"no .npy blocks under $dir")
-    val sorted = shapes.sortBy(_._1)
+    val sorted = StoreIO.listNames(dir, hconf).filter(_.endsWith(".npy")).map { name =>
+      val prefix = StoreIO.readPrefix(fs, new Path(base, name), 256)
+      (name.stripSuffix(".npy").toLong, parseShape(prefix))
+    }.sortBy(_._1)
     require(sorted.map(_._1) == (0L until sorted.size).toSeq,
       s"stack blocks not contiguous (got ids ${sorted.map(_._1)}) — a missing " +
         "block file would silently shift every later index")
-    val rest = sorted.head._2.tail
-    sorted.foreach { case (b, sh) =>
-      require(sh.tail == rest, s"block $b trailing shape ${sh.tail} != $rest")
-    }
-    val restVol = rest.product
-    val totalRows = sorted.map(_._2.head).sum
-    val rowStarts: Map[Long, Long] = sorted.map(_._1).zip(
-      sorted.scanLeft(0L) { case (acc, (_, sh)) => acc + sh.head }.dropRight(1)).toMap
-    val bc = s.sparkContext.broadcast((rowStarts, restVol))
+    val starts: Map[Long, Long] = sorted.map(_._1).zip(
+      sorted.scanLeft(0L) { case (acc, (_, sh)) => acc + sh.product }.dropRight(1)).toMap
+    val bc = s.sparkContext.broadcast(starts)
     // pathGlobFilter, NOT an in-path `*.npy` glob: a glob inside load()'s
     // path makes FileStreamSink.hasMetadata probe the literal glob string
     // as a file and log a WARN + stack trace on every read
@@ -167,43 +172,9 @@ object NpyStack {
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>
-        val (starts, rv) = bc.value
-        val blk = path.split("/").last.stripSuffix(".npy").toLong
-        val off = starts(blk) * rv
-        parseNpy(content).iterator.zipWithIndex.map { case (v, i) => (off + i, v) }
-      }.toDF("idx", "v")
-    graft.NdArray.fromFlat(flat, totalRows +: rest)
-  }
-
-  /** Read a `.npy` stack back as the element table `(idx, v)`. */
-  def read(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // phase 1 (driver, O(numBlocks)): block counts from 128-byte headers
-    val hconf = s.sparkContext.hadoopConfiguration
-    val (fs, base) = StoreIO.fsOf(dir, hconf)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    StoreIO.listNames(dir, hconf).foreach { name =>
-      if (name.endsWith(".npy")) {
-        val prefix = StoreIO.readPrefix(fs, new Path(base, name), 128)
-        counts += ((name.stripSuffix(".npy").toLong, parseCount(prefix)))
-      }
-    }
-    val sorted = counts.sortBy(_._1)
-    require(sorted.map(_._1) == (0L until sorted.size).toSeq,
-      s"stack blocks not contiguous (got ids ${sorted.map(_._1)}) — a missing " +
-        "block file would silently shift every later index")
-    val starts: Map[Long, Long] = sorted.map(_._1).zip(
-      sorted.scanLeft(0L) { case (acc, (_, n)) => acc + n }.dropRight(1)).toMap
-    val bc = s.sparkContext.broadcast(starts)
-
-    // phase 2 (distributed): decode payloads, emit (offset + i, v)
-    s.read.format("binaryFile").option("pathGlobFilter", "*.npy").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val blk = path.split("/").last.stripSuffix(".npy").toLong
-        val start = bc.value(blk)
+        val start = bc.value(path.split("/").last.stripSuffix(".npy").toLong)
         parseNpy(content).iterator.zipWithIndex.map { case (v, i) => (start + i, v) }
       }.toDF("idx", "v")
+    (sorted.map(_._2), flat)
   }
 }

@@ -280,6 +280,48 @@ object TileDb {
     }
   }
 
+  /** Every committed fragment's cells as `(idx, v, r)`: one distributed
+    * `binaryFile` scan over the manifest's `a0.tdb` files, each decoded
+    * row-major within its rectangular domain and mapped to the global
+    * row-major flat index of `shape`; `r` is the fragment's shadowing
+    * rank (manifest order, dense 0..f-1). */
+  private def decode(s: SparkSession, uri: String,
+                     frags: Seq[(String, Long, String, Seq[(Long, Long)])],
+                     shape: Seq[Long]): DataFrame = {
+    import s.implicits._
+    val strides = shape.scanRight(1L)(_ * _).tail // row-major global strides
+    val rankOf: Map[String, (Int, Seq[(Long, Long)])] =
+      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom) }.toMap
+    val bc = s.sparkContext.broadcast((rankOf, strides))
+    // EXPLICIT file paths from the manifest, not a directory scan:
+    // Spark's file index silently drops `_`-prefixed paths (metadata-file
+    // convention), which is every TileDB fragment dir — a recursive
+    // listing under __fragments reads NOTHING. Explicit leaves also skip
+    // the recursive-listing job; the driver already holds the manifest.
+    if (frags.isEmpty) s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v", "0 AS r")
+    else s.read.format("binaryFile")
+      .load(frags.map { case (name, _, _, _) => s"$uri/__fragments/$name/a0.tdb" }: _*)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
+      .flatMap { case (path, content) =>
+        val (rk, st) = bc.value
+        val fname = path.split("/").dropRight(1).last
+        rk.get(fname).iterator.flatMap { case (r, dom) =>
+          val ext = dom.map { case (lo, hi) => hi - lo + 1 }
+          val sub = ext.scanRight(1L)(_ * _).tail // row-major within subarray
+          val buf = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
+          (0 until content.length / 8).iterator.map { i =>
+            var rem = i.toLong; var g = 0L; var d = 0
+            while (d < dom.length) {
+              val c = dom(d)._1 + rem / sub(d); rem %= sub(d)
+              g += c * st(d); d += 1
+            }
+            (g, buf.getDouble(i * 8), r)
+          }
+        }
+      }.toDF("idx", "v", "r")
+  }
+
   /** Read the dense 1-d array as the element table `(idx, v)`: one
     * distributed `binaryFile` scan over every committed fragment's
     * `a0.tdb`, then the TileDB shadowing merge — the cell value from the
@@ -289,33 +331,10 @@ object TileDb {
     * fragment covers surface as the schema fill value, generated from
     * `spark.range` over the driver-merged uncovered intervals. */
   def read(s: SparkSession, uri: String): DataFrame = {
-    import s.implicits._
     val (schema, frags) = fragManifest(s, uri)
     require(schema.shape.length == 1, s"read() is 1-d; rank ${schema.shape.length} needs readNd")
-    val n = schema.shape.head
-    // shadowing rank by manifest order; ranks are dense 0..f-1
-    val rankOf: Map[String, (Int, Long)] =
-      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom.head._1) }.toMap
-    val bc = s.sparkContext.broadcast(rankOf)
-    // EXPLICIT file paths from the manifest, not a directory scan:
-    // Spark's file index silently drops `_`-prefixed paths (metadata-file
-    // convention), which is every TileDB fragment dir — a recursive
-    // listing under __fragments reads NOTHING. Explicit leaves also skip
-    // the recursive-listing job; the driver already holds the manifest.
-    val decoded =
-      if (frags.isEmpty) s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v", "0 AS r")
-      else s.read.format("binaryFile")
-        .load(frags.map { case (name, _, _, _) => s"$uri/__fragments/$name/a0.tdb" }: _*)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val fname = path.split("/").dropRight(1).last
-          bc.value.get(fname).iterator.flatMap { case (r, lo) =>
-            val buf = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-            (0 until content.length / 8).iterator.map(i => (lo + i, buf.getDouble(i * 8), r))
-          }
-        }.toDF("idx", "v", "r")
-    fillGaps(s, shadow(decoded, frags), frags, n, 1L, schema.fill)
+    fillGaps(s, shadow(decode(s, uri, frags, schema.shape), frags), frags,
+      schema.shape.head, 1L, schema.fill)
   }
 
   /** `merged` plus `fill`-valued cells for every axis-0 row of `rows` that
@@ -366,39 +385,9 @@ object TileDb {
     * [[read]]; fragments are rectangular subarrays, decoded row-major
     * within their domain and mapped to global row-major positions). */
   def readNd(s: SparkSession, uri: String): graft.NdArray = {
-    import s.implicits._
     val (schema, frags) = fragManifest(s, uri)
     val shape = schema.shape
-    val strides = shape.scanRight(1L)(_ * _).tail // row-major global strides
-    val rankOf: Map[String, (Int, Seq[(Long, Long)])] =
-      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom) }.toMap
-    val bc = s.sparkContext.broadcast((rankOf, strides))
-    // explicit manifest paths — see read() for why a directory scan
-    // under `_`-prefixed fragment dirs returns nothing
-    val decoded =
-      if (frags.isEmpty) s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v", "0 AS r")
-      else s.read.format("binaryFile")
-        .load(frags.map { case (name, _, _, _) => s"$uri/__fragments/$name/a0.tdb" }: _*)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val (rk, st) = bc.value
-          val fname = path.split("/").dropRight(1).last
-          rk.get(fname).iterator.flatMap { case (r, dom) =>
-            val ext = dom.map { case (lo, hi) => hi - lo + 1 }
-            val sub = ext.scanRight(1L)(_ * _).tail // row-major within subarray
-            val buf = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-            (0 until content.length / 8).iterator.map { i =>
-              var rem = i.toLong; var g = 0L; var d = 0
-              while (d < dom.length) {
-                val c = dom(d)._1 + rem / sub(d); rem %= sub(d)
-                g += c * st(d); d += 1
-              }
-              (g, buf.getDouble(i * 8), r)
-            }
-          }
-        }.toDF("idx", "v", "r")
-    val merged = shadow(decoded, frags)
+    val merged = shadow(decode(s, uri, frags, shape), frags)
     // Densify uncovered cells to the schema fill, like the 1-d read():
     // writeNd/tiledbSink fragments span the FULL trailing dims, so the
     // uncovered region is a union of axis-0 row intervals, and a row

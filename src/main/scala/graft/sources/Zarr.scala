@@ -1218,13 +1218,11 @@ object Zarr {
     * chunk, absent chunks written as zeros) so the store is complete.
     * `shard` (v3 only) wraps the codec chain in `sharding_indexed`: each
     * written object packs `chunks/shard` inner chunks behind a crc32c
-    * index — the 100 TB object-count lever. `dtype` is the stored element
-    * type (`<f8`, `<f4`, `<i4`, `|u1`; integer types refuse values they
-    * cannot hold exactly). */
+    * index — the 100 TB object-count lever. */
   def writeNd(nd: graft.NdArray, dir: String, chunks: Seq[Long],
               compressor: Option[String] = None, format: Int = 2,
-              shard: Option[Seq[Long]] = None, dtype: String = "<f8"): Unit =
-    writeCells(nd.df, nd.shape, dir, chunks, compressor, format, shard, dtype)
+              shard: Option[Seq[Long]] = None): Unit =
+    writeCells(nd.df, nd.shape, dir, chunks, compressor, format, shard, "<f8")
 
   /** [[writeNd]] over a bare coordinate table `(c0..c{r-1}, v)`, so the
     * 1-d and 2-d writers (and zero-length arrays) share it. */

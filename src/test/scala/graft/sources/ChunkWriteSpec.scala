@@ -218,6 +218,33 @@ class ChunkWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("one partition spanning many chunks: fragments leave early, bytes unchanged") {
+    // 1.5M cells in 12 chunks of 2^17 (ragged last): more than a map task
+    // holds open at once, so fragments must leave before the input ends.
+    // Chunk 0 is complete and the rest have holes (idx % 11 == 7).
+    val n = 1500000L
+    val chunk = 1L << 17
+    val grid = (n + chunk - 1) / chunk
+    def value(i: Long): Double = if (i == 5) -0.0 else i * 0.5 - 1000.25
+    def absent(i: Long): Boolean = i >= chunk && i % 11 == 7
+    for ((order, idxSql) <- Seq("sorted" -> "id", "strided" -> s"(id * 7919) % $n")) {
+      val el = spark.range(0, n, 1, 1).selectExpr(s"$idxSql AS idx")
+        .where(s"NOT (idx >= $chunk AND idx % 11 = 7)")
+        .selectExpr("idx", "IF(idx = 5, -0.0D, idx * 0.5D - 1000.25D) AS v")
+      val dir = freshDir()
+      val recs = shuffleRecords(Zarr.write1d(el, dir, n, chunk))
+      if (order == "strided")
+        assert(recs > grid, s"$recs shuffle records: every chunk left the task only once")
+      for (b <- 0L until grid) {
+        val want = Array.tabulate(chunk.toInt) { k =>
+          val i = b * chunk + k
+          if (i >= n || absent(i)) 0.0 else value(i)
+        }
+        sameBytes(s"$dir/$b", Zarr.encodeChunk(want, None), s"$order chunk $b")
+      }
+    }
+  }
+
   test("an empty input still writes every chunk as fill") {
     val dir = freshDir()
     val empty = spark.range(0).selectExpr("id AS idx", "CAST(id AS DOUBLE) AS v")
